@@ -180,6 +180,91 @@ object PlanAudit {
       s"shards_opened=${p.shardsOpened} bytes_read=${p.bytesRead} file_bytes=${p.fileBytes}")
   }
 
+  /** A chunk-store point lookup must decode LATE: in the optimized plan
+    * the chunk-coordinate Filter sits below the projection that decodes
+    * `data` (the [[graft.volume.StoreScan]] decode UDF), so only the
+    * owning chunk decompresses, and the store scan plans no Exchange. A
+    * filter left above the decode (an opaque typed map, a projection the
+    * optimizer cannot push through) would decode every scanned chunk to
+    * read one voxel. Probes the label-search gate's store, as
+    * [[shardedPointShape]] probes its own.
+    */
+  def storePointShape(df: DataFrame): Shape = {
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project}
+    val store = graft.queries.VolumeQueries.labelSearchStore(df.sparkSession)
+    val q = graft.volume.ChunkStore.read(df.sparkSession, store).pointQuery(9, 9, 9)
+    val plan = q.queryExecution.optimizedPlan
+    val decodes = plan.collect {
+      case p: Project if p.projectList.exists(_.exists {
+        case u: ScalaUDF => u.udfName.contains(graft.volume.StoreScan.DecodeUdf)
+        case _ => false
+      }) => p
+    }
+    def coordFilters(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) = p.collect {
+      case f: Filter if f.condition.references.exists(_.name == "z0") => f
+    }
+    val below = decodes.map(d => coordFilters(d.child).size).sum
+    val total = coordFilters(plan).size
+    val exchanges = shuffleExchanges(q.toDF())
+    Shape(decodes.size == 1 && below >= 1 && below == total && exchanges == 0,
+      s"decodes=${decodes.size} coord_filters_below=$below/$total exchanges=$exchanges")
+  }
+
+  /** An ontology lookup must run NO job: [[graft.volume.RegionTable.readCsv]]
+    * holds the dimension table driver-local, so `lookupById`'s
+    * filter → select → collect folds into one `LocalTableScan`. Evidence is
+    * the physical plan and the jobs the lookup actually started; a CSV
+    * re-scan per click would show as a file scan and one job per lookup.
+    */
+  def regionLookupShape(df: DataFrame): Shape = {
+    val spark = df.sparkSession
+    val csv = java.nio.file.Files.createTempFile("graft_regions", ".csv")
+    csv.toFile.deleteOnExit()
+    java.nio.file.Files.writeString(csv,
+      "Region,RegionAbbr,RegionName,Level,Parent\n997,root,root,0,0\n8,grey,Basic cell groups,1,997\n")
+    val regions = graft.volume.RegionTable.readCsv(spark, csv.toString)
+    val leaves = nodes(graft.volume.RegionTable.byId(regions, 8L).queryExecution.executedPlan)
+    val local = leaves.forall(_.isInstanceOf[org.apache.spark.sql.execution.LocalTableScanExec])
+    var answer = ""
+    val jobs = jobsStartedBy(spark) { answer = graft.volume.RegionTable.lookupById(regions, "8") }
+    Shape(local && leaves.size == 1 && jobs == 0 && answer.startsWith("Region 8: Basic cell groups"),
+      s"plan=${leaves.map(_.nodeName).mkString(",")} jobs=$jobs")
+  }
+
+  /** Spark jobs started while `body` ran on this thread. Listener events
+    * arrive asynchronously but in order, so the count is read only after
+    * a tagged one-task sentinel job has been seen. Jobs are tagged with a
+    * local property of their own, leaving any caller's job group alone.
+    */
+  private def jobsStartedBy(spark: org.apache.spark.sql.SparkSession)(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val key = "graft.planAudit.tag"
+    val tag = java.util.UUID.randomUUID().toString
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val sentinel = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(key)).orNull match {
+          case `tag` => started.incrementAndGet()
+          case t if t == tag + "-sentinel" => sentinel.countDown()
+          case _ => ()
+        }
+    }
+    def tagged[A](t: String)(f: => A): A = {
+      sc.setLocalProperty(key, t)
+      try f finally sc.setLocalProperty(key, null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      tagged(tag)(body)
+      tagged(tag + "-sentinel")(sc.parallelize(Seq(1), 1).count())
+      require(sentinel.await(60, java.util.concurrent.TimeUnit.SECONDS), "sentinel job never seen")
+      started.get
+    } finally sc.removeSparkListener(listener)
+  }
+
   /** The sharded ROI read must PRUNE: touch only the intersecting
     * shards (4 of 8 for the gate's box), read only the intersecting
     * inner chunks (12 of 64), and cover fewer bytes than the touched
@@ -762,6 +847,8 @@ object PlanAudit {
     "doc_warc_multifile" -> warcMultiIntakeShape,
     "vol_zarr3_sharded_point" -> shardedPointShape,
     "vol_zarr3_sharded_box" -> shardedBoxShape,
+    "vol_chunk_point_lookup" -> storePointShape,
+    "vol_region_csv_scan" -> regionLookupShape,
     "doc_dedup_corpus" -> broadcastAntiShape,
     "doc_dedup_best" -> broadcastAntiShape,
     "emb_ivf_persisted" -> ivfPrunedScanShape,

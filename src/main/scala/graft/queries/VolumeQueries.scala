@@ -259,7 +259,7 @@ object VolumeQueries {
     * (bench reps must not re-pay the write).
     */
   private val labelSearchStoreCache = new java.util.concurrent.atomic.AtomicReference[String]()
-  private def labelSearchStore(s: SparkSession): String = {
+  private[graft] def labelSearchStore(s: SparkSession): String = {
     val cached = labelSearchStoreCache.get()
     if (cached != null) cached
     else {

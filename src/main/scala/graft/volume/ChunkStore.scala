@@ -2,6 +2,8 @@ package graft.volume
 
 import graft.io.{Fio, FioConf}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.api.java.UDF3
+import org.apache.spark.sql.functions.col
 import com.github.luben.zstd.Zstd
 import java.nio.{ByteBuffer, ByteOrder}
 
@@ -156,32 +158,58 @@ object ChunkStore {
     Fio.listNames(pathStr)
       .filter(_.matches("\\d+\\.\\d+\\.\\d+"))
 
-  private[volume] def decodeFile(pathStr: String, name: String)(implicit fc: FioConf): Chunk = {
-    val Array(cz, cy, cx) = name.split("\\.").map(_.toInt)
+  private[volume] def decodeFile(pathStr: String, name: String)(implicit fc: FioConf): Array[Byte] = {
     val bytes = Fio.readAllBytes(Fio.child(pathStr, name))
     val h = readHeader(bytes)
     val data = new Array[Byte](h.rawLen)
     Zstd.decompressByteArray(data, 0, h.rawLen, bytes, HeaderBytes, bytes.length - HeaderBytes)
-    Chunk(cz, cy, cx, h.z0, h.y0, h.x0, h.nz, h.ny, h.nx, data)
+    data
   }
+
+  /** A chunk's descriptor and label range, as its header records them. */
+  final case class Peek(
+      cz: Int, cy: Int, cx: Int, z0: Long, y0: Long, x0: Long,
+      nz: Int, ny: Int, nx: Int, lmin: Long, lmax: Long)
+
+  /** One descriptor row per chunk file from its 64-byte header peek —
+    * ragged edge chunks do not start on `c·chunkZ`, so only the header
+    * knows their box — plus the header's label range (`lmin`, `lmax`).
+    * The peeks run in the scan's tasks, one slice per core.
+    */
+  private def descriptors(spark: SparkSession, pathStr: String, names: Seq[String])(
+      implicit fc: FioConf): Dataset[Peek] = {
+    import spark.implicits._
+    val peeked = spark.sparkContext.parallelize(names, StoreScan.slices(spark, names.size))
+      .mapPartitions { it =>
+        val hdr = new Array[Byte](HeaderBytes)
+        it.map { name =>
+          val in = Fio.openStream(Fio.child(pathStr, name))
+          try in.readFully(0L, hdr) finally in.close()
+          val h = readHeader(hdr)
+          val Array(cz, cy, cx) = name.split("\\.").map(_.toInt)
+          Peek(cz, cy, cx, h.z0, h.y0, h.x0, h.nz, h.ny, h.nx, h.lmin, h.lmax)
+        }
+      }
+    spark.createDataset(peeked)
+  }
+
+  private def decoder(pathStr: String)(implicit fc: FioConf): UDF3[Int, Int, Int, Array[Byte]] =
+    (cz, cy, cx) => decodeFile(pathStr, s"$cz.$cy.$cx")
 
   def read(spark: SparkSession, path: String): ChunkVolume = {
     implicit val fc: FioConf = FioConf.of(spark)
     val meta = ChunkVolume.readSidecar(path)
     val pathStr = Fio.qualify(path)
-    val names = chunkFileNames(pathStr)
-    import spark.implicits._
-    val chunks = spark.createDataset(names).repartition(spark.sparkContext.defaultParallelism)
-      .mapPartitions(_.map(decodeFile(pathStr, _)))
-    ChunkVolume(chunks, meta)
+    val desc = descriptors(spark, pathStr, chunkFileNames(pathStr))
+    ChunkVolume(StoreScan.decodeLate(desc)(decoder(pathStr)), meta)
   }
 
   /** "Which chunks contain label X, and how often?" — candidates from ONE
-    * read of the consolidated stats index when present (else distributed
-    * 64-byte header peeks — still no decompression), then only the
-    * candidate chunks decode for the exact count (the region-location
-    * query, value-indexed: lookup_test2.py's semantics over a whole
-    * store).
+    * read of the consolidated stats index when present (else every chunk
+    * file), then the header's label range as a descriptor predicate that
+    * the optimizer pushes below the decode: only chunks whose range holds
+    * X decompress for the exact count (the region-location query,
+    * value-indexed: lookup_test2.py's semantics over a whole store).
     */
   def findLabel(spark: SparkSession, path: String, label: Long): DataFrame = {
     implicit val fc: FioConf = FioConf.of(spark)
@@ -190,7 +218,6 @@ object ChunkStore {
     val bpp = meta.bytesPerVoxel
     val unsigned = meta.isUnsigned
     val pathStr = Fio.qualify(path)
-    import spark.implicits._
     val candidateNames = readStatsIndex(pathStr) match {
       case Some(idx) =>
         chunkFileNames(pathStr).filter { name =>
@@ -198,30 +225,20 @@ object ChunkStore {
         }
       case None => chunkFileNames(pathStr)
     }
-    val names = spark.createDataset(candidateNames)
-      .repartition(spark.sparkContext.defaultParallelism)
-    names
-      .mapPartitions { it =>
-        val hdr = new Array[Byte](HeaderBytes)
-        it.filter { name =>
-          val in = Fio.openStream(Fio.child(pathStr, name))
-          try in.readFully(0L, hdr) finally in.close()
-          val h = readHeader(hdr)
-          h.lmin <= label && label <= h.lmax
-        }
-      }
-      .mapPartitions(_.map { name =>
-        val c = decodeFile(pathStr, name)
-        val nElems = c.nz * c.ny * c.nx
-        var count = 0L
+    val desc = descriptors(spark, pathStr, candidateNames)
+      .filter(col("lmin") <= label && col("lmax") >= label)
+    import spark.implicits._
+    StoreScan.decodeLate(desc)(decoder(pathStr))
+      .map { c =>
+        var n = 0L
         var i = 0
-        while (i < nElems) {
-          if (ChunkKernels.decodeLong(c.data, i, bpp, unsigned) == label) count += 1
+        while (i < c.nz * c.ny * c.nx) {
+          if (ChunkKernels.decodeLong(c.data, i, bpp, unsigned) == label) n += 1
           i += 1
         }
-        (c.cz, c.cy, c.cx, count)
-      })
+        (c.cz, c.cy, c.cx, n)
+      }
       .toDF("cz", "cy", "cx", "n_occurrences")
-      .filter(org.apache.spark.sql.functions.col("n_occurrences") > 0)
+      .filter(col("n_occurrences") > 0)
   }
 }

@@ -2,7 +2,10 @@ package graft.volume
 
 import graft.io.{Fio, FioConf}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.api.java.UDF6
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, LongType}
 
 /** One dense sub-block of a chunked volume. `data` is a packed C-order
   * (z,y,x) little-endian byte block of nz·ny·nx elements.
@@ -348,10 +351,12 @@ final case class ChunkVolume(chunks: Dataset[Chunk], meta: VolumeMeta) {
     val bpp = meta.bytesPerVoxel
     val unsigned = meta.isUnsigned
     import chunks.sparkSession.implicits._
+    // a Column predicate, not a typed one: on a store read it runs below
+    // the decode, so only intersecting chunks decompress
     chunks
-      .filter(c => c.z0 < z1 && z0 < c.z0 + c.nz
-        && c.y0 < y1 && y0 < c.y0 + c.ny
-        && c.x0 < x1 && x0 < c.x0 + c.nx)
+      .filter(col("z0") < z1 && lit(z0) < col("z0") + col("nz")
+        && col("y0") < y1 && lit(y0) < col("y0") + col("ny")
+        && col("x0") < x1 && lit(x0) < col("x0") + col("nx"))
       .flatMap { c =>
         val bz = math.max(z0, c.z0); val ez = math.min(z1, c.z0 + c.nz)
         val by = math.max(y0, c.y0); val ey = math.min(y1, c.y0 + c.ny)
@@ -688,24 +693,45 @@ final case class ChunkVolume(chunks: Dataset[Chunk], meta: VolumeMeta) {
 
   /** Point lookup WITHOUT a volume scan (P4): range predicates on the chunk
     * coordinate columns prune to the single owning chunk (parquet row-group
-    * min/max stats after a sorted write; a narrow filter in memory), then
-    * one element is decoded. Mirrors verify_labels.py:21 /
-    * view_with_labels.py:24 touching exactly one zarr chunk.
+    * min/max stats after a sorted write; on a chunk-store read the filter
+    * runs below the decode projection, see [[StoreScan]]), then one element
+    * is decoded. Mirrors verify_labels.py:21 / view_with_labels.py:24
+    * touching exactly one zarr chunk.
     */
-  def pointLookup(z: Long, y: Long, x: Long): Option[Long] = {
+  def pointLookup(z: Long, y: Long, x: Long): Option[Long] =
+    // chunks tile the volume, so at most one row: one job over every
+    // partition beats take(1)'s partition-at-a-time rounds
+    pointQuery(z, y, x).collect().headOption
+
+  /** The plan behind [[pointLookup]]: at most one row, the label at (z,y,x). */
+  private[graft] def pointQuery(z: Long, y: Long, x: Long): Dataset[Long] = {
     require(!meta.isFloating, "pointLookup decodes integral labels")
     val bpp = meta.bytesPerVoxel
     val unsigned = meta.isUnsigned
     import chunks.sparkSession.implicits._
-    chunks
-      .filter(col("z0") <= z && lit(z) < col("z0") + col("nz")
-        && col("y0") <= y && lit(y) < col("y0") + col("ny")
-        && col("x0") <= x && lit(x) < col("x0") + col("nx"))
-      .map { c =>
-        val i = ((z - c.z0).toInt * c.ny + (y - c.y0).toInt) * c.nx + (x - c.x0).toInt
-        ChunkKernels.decodeLong(c.data, i, bpp, unsigned)
+    val inBox =
+      if (chunks.queryExecution.analyzed.exists(_.isInstanceOf[LogicalRelation]))
+        // literal bounds: a file scan turns them into row-group pruning
+        col("z0") <= z && lit(z) < col("z0") + col("nz") &&
+          col("y0") <= y && lit(y) < col("y0") + col("ny") &&
+          col("x0") <= x && lit(x) < col("x0") + col("nx")
+      else {
+        // the point rides in a closure, so the generated code is the same
+        // for every point and compiles once; literal bounds would compile
+        // a new stage per lookup (~60 ms at 4 cores)
+        val contains: UDF6[Long, Int, Long, Int, Long, Int, Boolean] = (z0, nz, y0, ny, x0, nx) =>
+          z0 <= z && z < z0 + nz && y0 <= y && y < y0 + ny && x0 <= x && x < x0 + nx
+        udf(contains, BooleanType)(col("z0"), col("nz"), col("y0"), col("ny"), col("x0"), col("nx"))
       }
-      .take(1).headOption
+    // a UDF over `data`, not a typed map: the optimizer fuses it with a
+    // store scan's decode, so the chunk bytes are never copied into a row
+    val voxel: UDF6[Array[Byte], Long, Long, Long, Int, Int, Long] = (data, z0, y0, x0, ny, nx) =>
+      ChunkKernels.decodeLong(data, ((z - z0).toInt * ny + (y - y0).toInt) * nx + (x - x0).toInt,
+        bpp, unsigned)
+    chunks
+      .filter(inBox)
+      .select(udf(voxel, LongType)(col("data"), col("z0"), col("y0"), col("x0"), col("ny"), col("nx")))
+      .as[Long]
   }
 
   /** Chunk-store write (K1/K2): compressed parquet, one chunk per row,

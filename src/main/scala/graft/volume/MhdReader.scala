@@ -45,8 +45,13 @@ object MhdReader {
 
     import spark.implicits._
     val chunks = spark.range(nChunks).mapPartitions { ids =>
-      // one open stream per task, positioned reads per chunk row-run
+      // one open stream per task, positioned reads per chunk row-run;
+      // closed unconditionally at task end: hasNext-exhaustion alone would
+      // leak the handle on a partially consumed scan (.limit, task abort)
       var raf: FioRandom = null
+      Option(org.apache.spark.TaskContext.get()).foreach(_.addTaskCompletionListener[Unit] { _ =>
+        if (raf != null) { raf.close(); raf = null }
+      })
       def handle() = {
         if (raf == null) raf = Fio.openRandom(rawPath)
         raf
@@ -152,6 +157,10 @@ object MhdReader {
     import spark.implicits._
     val chunks = spark.range(0, nUnits, 1, parts).mapPartitions { ids =>
       var raf: FioRandom = null
+      // closed at task end, as in read()
+      Option(org.apache.spark.TaskContext.get()).foreach(_.addTaskCompletionListener[Unit] { _ =>
+        if (raf != null) { raf.close(); raf = null }
+      })
       def handle() = {
         if (raf == null) raf = Fio.openRandom(rawPath)
         raf

@@ -169,7 +169,7 @@ object UpscaleCli {
   def main(argv: Array[String]): Unit = {
     val a = parseArgs(argv.toIndexedSeq)
     val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
+      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"))
       .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
       .config("spark.ui.enabled", "false")
       .getOrCreate()

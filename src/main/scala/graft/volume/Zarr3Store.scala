@@ -390,22 +390,12 @@ object Zarr3Store {
     val Seq(ncz0, ncy0, ncx0) = zm.gridShape
     val vm = VolumeMeta(dz, dy, dx, cz, cy, cx, ncz0, ncy0, ncx0, zm.elementType,
       spacingX = 1.0, spacingY = 1.0, spacingZ = 1.0)
-    val pathStr = dir
     val sep = zm.dimSeparator
-    val (ncy, ncx) = (vm.ncy, vm.ncx)
-    import spark.implicits._
-    val nChunks = vm.ncz.toLong * ncy * ncx
-    val chunks = spark.range(nChunks)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[Long]
-      .map { idx =>
-        val icz = (idx / (ncy.toLong * ncx)).toInt
-        val icy = ((idx / ncx) % ncy).toInt
-        val icx = (idx % ncx).toInt
-        // default chunk key encoding: "c" <sep> z <sep> y <sep> x
-        val bytes = Fio.readAllIfExists(Fio.child(pathStr, Seq("c", icz, icy, icx).mkString(sep)))
-        ZarrStore.decodeChunk(bytes, zm, vm, icz, icy, icx)
-      }
+    // default chunk key encoding: "c" <sep> z <sep> y <sep> x
+    val chunks = StoreScan.decodeLate(StoreScan.gridDescriptors(spark, vm)) { (cz, cy, cx) =>
+      val bytes = Fio.readAllIfExists(Fio.child(dir, Seq("c", cz, cy, cx).mkString(sep)))
+      ZarrStore.decodeChunk(bytes, zm, vm, cz, cy, cx).data
+    }
     ChunkVolume(chunks, vm)
   }
 

@@ -854,19 +854,9 @@ object ZarrStore {
     val (zm, vm) = readMeta(path)
     val pathStr = Fio.qualify(path)
     val sep = zm.dimSeparator
-    val (ncy, ncx) = (vm.ncy, vm.ncx)
-    import spark.implicits._
-    val nChunks = vm.ncz.toLong * ncy * ncx
-    val chunks = spark.range(nChunks)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .as[Long]
-      .map { idx =>
-        val cz = (idx / (ncy.toLong * ncx)).toInt
-        val cy = ((idx / ncx) % ncy).toInt
-        val cx = (idx % ncx).toInt
-        val bytes = Fio.readAllIfExists(Fio.child(pathStr, s"$cz$sep$cy$sep$cx"))
-        decodeChunk(bytes, zm, vm, cz, cy, cx)
-      }
+    val chunks = StoreScan.decodeLate(StoreScan.gridDescriptors(spark, vm)) { (cz, cy, cx) =>
+      decodeChunk(Fio.readAllIfExists(Fio.child(pathStr, s"$cz$sep$cy$sep$cx")), zm, vm, cz, cy, cx).data
+    }
     ChunkVolume(chunks, vm)
   }
 }

@@ -278,6 +278,70 @@ class ChunkVolumeSpec extends AnyFunSuite with SparkSpec {
     assert(collectVox(dec.toVoxels) === collectVox(vol.decimate().toVoxels))
   }
 
+  test("ChunkStore point lookups on a ragged store match brute force; read plans no Exchange") {
+    val dir = Files.createTempDirectory("cstore").toString + "/ragged"
+    ChunkStore.write(vol.upscale(2), dir)
+    val store = ChunkStore.read(spark, dir)
+    // ×2 children of the 2-plane edge chunks are 2 planes thick, so the
+    // second starts off the (5,4,6) grid: only the chunk headers know it
+    val boxes = store.chunks.select("z0", "nz").collect().map(r => (r.getLong(0), r.getInt(1)))
+    assert(boxes.contains((22L, 2)) && boxes.exists(_._1 % store.meta.chunkZ != 0))
+    assert(graft.plans.PlanAudit.shuffleExchanges(store.chunks.toDF()) === 0)
+    val orig = collectVox(vox)
+    val (uz, uy, ux) = (2 * dz, 2 * dy, 2 * dx)
+    val rnd = new scala.util.Random(7)
+    val pts = Seq((0L, 0L, 0L), (uz - 1, uy - 1, ux - 1), (22L, 17L, 25L), (20L, 0L, 27L)) ++
+      Seq.fill(12)((uz - 4 + rnd.nextInt(4).toLong, rnd.nextInt(uy.toInt).toLong, rnd.nextInt(ux.toInt).toLong)) ++
+      Seq.fill(12)((rnd.nextInt(uz.toInt).toLong, rnd.nextInt(uy.toInt).toLong, rnd.nextInt(ux.toInt).toLong))
+    for ((z, y, x) <- pts)
+      assert(store.pointLookup(z, y, x) === Some(orig((z / 2, y / 2, x / 2))), s"voxel ($z,$y,$x)")
+    for ((z, y, x) <- Seq((uz, 0L, 0L), (0L, uy, 0L), (0L, 0L, ux), (-1L, 0L, 0L)))
+      assert(store.pointLookup(z, y, x) === None, s"voxel ($z,$y,$x)")
+    // a box across the ragged edge chunks
+    val crop = collectVox(store.cropVoxels(19, 24, 15, 20, 22, 28))
+    assert(crop.size === 5 * 5 * 6)
+    for (((z, y, x), l) <- crop) assert(l === orig((z / 2, y / 2, x / 2)), s"voxel ($z,$y,$x)")
+  }
+
+  test("MhdReader: 200 point lookups and 200 partial scans close every handle they open") {
+    val dir = Files.createTempDirectory("mhdfd")
+    val (nz, ny, nx) = (6, 5, 7)
+    val raw = new Array[Byte](nz * ny * nx * 4)
+    for (i <- 0 until nz * ny * nx) ChunkKernels.encodeLong(15564L + i, raw, i, 4)
+    Files.write(dir.resolve("v.raw"), raw)
+    Files.writeString(dir.resolve("v.mhd"),
+      s"""ObjectType = Image
+         |NDims = 3
+         |DimSize = $nx $ny $nz
+         |ElementType = MET_UINT
+         |ElementDataFile = v.raw
+         |""".stripMargin)
+    // read through a file system that counts its open input streams: a
+    // leaked stream is garbage the JVM may close on its own at any GC, so
+    // the descriptor count alone cannot be trusted to show a leak
+    spark.sparkContext.hadoopConfiguration.set("fs.countfs.impl", classOf[OpenCountingFs].getName)
+    spark.sparkContext.hadoopConfiguration.setBoolean("fs.countfs.impl.disable.cache", true)
+    val meta = MhdMeta.parse("countfs://" + dir.resolve("v.mhd"))(graft.io.FioConf.of(spark))
+    val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.UnixOperatingSystemMXBean]
+    def round(k: Int): Unit = {
+      val (z, y, x) = (k % nz, k % ny, k % nx)
+      val want = 15564L + (z * ny + y) * nx + x
+      val (vol, s) = if (k % 2 == 0) (MhdReader.read(spark, meta, 1, 1, nx), 1L)
+        else (MhdReader.readUpscaled(spark, meta, 1, 1, nx, 2), 2L)
+      assert(vol.pointLookup(s * z, s * y, s * x) === Some(want))
+      // a scan that stops after its first chunk: the task ends before its
+      // iterator (several chunks, or one unit's several children) is exhausted
+      assert(vol.chunks.take(1).length === 1)
+    }
+    (0 until 20).foreach(round)
+    val before = os.getOpenFileDescriptorCount
+    (0 until 200).foreach(round)
+    val grown = os.getOpenFileDescriptorCount - before
+    assert(OpenCountingFs.open.get === 0, "input streams left open")
+    assert(grown < 20, s"open descriptors grew by $grown over 200 rounds")
+  }
+
   test("PyramidWriter: levels on disk + OME multiscales metadata") {
     val dir = Files.createTempDirectory("pyr").toString + "/ome"
     PyramidWriter.write(vol, levels = 3, dir, upscaleFactor = 2)
@@ -292,4 +356,27 @@ class ChunkVolumeSpec extends AnyFunSuite with SparkSpec {
     val expect = collectVox(vol.decimate().toVoxels)
     assert(collectVox(l1.toVoxels) === expect)
   }
+}
+
+/** The local file system under the `countfs` scheme, counting the input
+  * streams it has opened and not yet closed.
+  */
+class OpenCountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.{FSDataInputStream, Path}
+  override def getUri: java.net.URI = java.net.URI.create("countfs:///")
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    val in = super.open(f, bufferSize)
+    OpenCountingFs.open.incrementAndGet()
+    val closed = new java.util.concurrent.atomic.AtomicBoolean(false)
+    new FSDataInputStream(in.getWrappedStream) {
+      override def close(): Unit = {
+        super.close()
+        if (closed.compareAndSet(false, true)) OpenCountingFs.open.decrementAndGet()
+      }
+    }
+  }
+}
+
+object OpenCountingFs {
+  val open = new java.util.concurrent.atomic.AtomicInteger
 }

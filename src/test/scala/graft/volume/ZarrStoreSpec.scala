@@ -214,6 +214,42 @@ class ZarrStoreSpec extends AnyFunSuite with SparkSpec {
     assert(collectVox(back.toVoxels) === collectVox(vox))
   }
 
+  test("point lookups match brute force: fill_value chunk, big-endian, v3, out of bounds; no Exchange") {
+    val orig = collectVox(vox).map { case (z, y, x, l) => (z, y, x) -> l }.toMap
+    // absent chunk file → fill_value (set non-zero so the fill is visible)
+    val absent = Files.createTempDirectory("zarr").toString + "/fill.zarr"
+    ZarrStore.write(vol, absent, ZarrStore.Zlib(5))
+    Files.delete(Paths.get(absent, "1.0.1"))
+    val za = Files.readString(Paths.get(absent, ".zarray"))
+    Files.writeString(Paths.get(absent, ".zarray"), za.replace("\"fill_value\": 0", "\"fill_value\": 9"))
+    def expectFill(z: Long, y: Long, x: Long) =
+      if (z / 3 == 1 && y / 4 == 0 && x / 2 == 1) 9L else orig((z, y, x))
+    // big-endian: payload bytes swapped and the dtype tag flipped
+    val be = Files.createTempDirectory("zarr").toString + "/be.zarr"
+    ZarrStore.write(vol, be, ZarrStore.Raw)
+    for (p <- Files.list(Paths.get(be)).toArray.map(_.asInstanceOf[java.nio.file.Path])
+         if p.getFileName.toString.matches("\\d+\\.\\d+\\.\\d+")) {
+      val b = Files.readAllBytes(p)
+      ZarrStore.byteSwap(b, 4)
+      Files.write(p, b)
+    }
+    Files.writeString(Paths.get(be, ".zarray"),
+      Files.readString(Paths.get(be, ".zarray")).replace("\"<u4\"", "\">u4\""))
+    val v3 = Files.createTempDirectory("zarr3").toString + "/a.zarr"
+    Zarr3Store.write(vol, v3, ZarrStore.ZstdCodec())
+    val stores = Seq(
+      ("fill", ZarrStore.read(spark, absent), expectFill _),
+      ("big-endian", ZarrStore.read(spark, be), (z: Long, y: Long, x: Long) => orig((z, y, x))),
+      ("v3", Zarr3Store.read(spark, v3), (z: Long, y: Long, x: Long) => orig((z, y, x))))
+    for ((name, store, want) <- stores) {
+      assert(graft.plans.PlanAudit.shuffleExchanges(store.chunks.toDF()) === 0, name)
+      for (z <- 0L until dz; y <- Seq(0L, dy - 1); x <- 0L until dx)
+        assert(store.pointLookup(z, y, x) === Some(want(z, y, x)), s"$name voxel ($z,$y,$x)")
+      for ((z, y, x) <- Seq((dz, 0L, 0L), (0L, dy, 0L), (0L, 0L, dx), (0L, -1L, 0L)))
+        assert(store.pointLookup(z, y, x) === None, s"$name voxel ($z,$y,$x)")
+    }
+  }
+
   test("format(\"zarr\") DSv2 WRITE: chunk frame → save → bit-exact read-back; append reuses metadata") {
     val dir = Files.createTempDirectory("zarr_w").toString + "/w.zarr"
     val expect = collectVox(vol.toVoxels)
