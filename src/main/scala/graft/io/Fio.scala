@@ -21,21 +21,30 @@ import java.nio.charset.StandardCharsets
   * classpath.
   *
   * A conf from [[FioConf.of]] ships as a broadcast of its current
-  * contents, made once per distinct contents per SparkContext: the full
-  * conf is ~1,000 entries (~110 KB), and writing it into every closure
-  * cost ~10–35 ms per stage on the driver plus ~15 ms per task to read
-  * back — the bulk of a one-chunk point lookup.
+  * contents instead: the full conf is ~1,000 entries (~110 KB), and
+  * writing it into every closure cost ~10–35 ms per stage on the driver
+  * plus ~15 ms per task to read back — the bulk of a one-chunk point
+  * lookup.
   */
 final class FioConf(
     @transient private var c: Configuration,
     @transient private val sc: SparkContext = null) extends Serializable {
+  /** The broadcasts this instance has shipped. A plan that captured the
+    * instance keeps them reachable, so the context cleaner drops one only
+    * once no job can read it.
+    */
+  @transient private var sent: List[Broadcast[FioConf]] = Nil
   def conf: Configuration = {
     if (c == null) c = new Configuration() // driverless fallback (tests, tools)
     c
   }
   private def writeObject(out: java.io.ObjectOutputStream): Unit = {
     out.defaultWriteObject()
-    val shipped = if (sc == null || sc.isStopped) null else FioConf.broadcastOf(sc, conf)
+    val shipped = if (sc == null || sc.isStopped) null else {
+      val b = FioConf.broadcastOf(sc, conf)
+      synchronized { if (!sent.contains(b)) sent = b :: sent }
+      b
+    }
     out.writeObject(shipped)
     if (shipped == null) conf.write(out)
   }
@@ -61,24 +70,25 @@ object FioConf {
     */
   implicit lazy val default: FioConf = new FioConf(new Configuration())
 
-  /** Every contents broadcast so far, per context. None is dropped: a job
-    * serialized against an older contents may still be reading it.
+  /** The latest contents broadcast per context, reused while the contents
+    * stay equal. One it replaces is held only by the FioConf instances
+    * that shipped it, so a context keeps one broadcast plus those that
+    * live plans still reference.
     */
-  private val shipped =
-    new java.util.WeakHashMap[SparkContext, Map[Map[String, String], Broadcast[FioConf]]]()
+  private val latest =
+    new java.util.WeakHashMap[SparkContext, (Map[String, String], Broadcast[FioConf])]()
 
   private def broadcastOf(sc: SparkContext, conf: Configuration): Broadcast[FioConf] = {
     import scala.jdk.CollectionConverters._
     val entries = conf.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
-    shipped.synchronized {
-      val known = Option(shipped.get(sc)).getOrElse(Map.empty)
-      known.getOrElse(entries, {
+    latest.synchronized {
+      Option(latest.get(sc)).collect { case (`entries`, b) => b }.getOrElse {
         val copy = new Configuration(false)
         entries.foreach { case (k, v) => copy.set(k, v) }
         val b = sc.broadcast(new FioConf(copy))
-        shipped.put(sc, known + (entries -> b))
+        latest.put(sc, (entries, b))
         b
-      })
+      }
     }
   }
 }

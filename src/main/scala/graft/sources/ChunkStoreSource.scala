@@ -175,7 +175,7 @@ class ChunkStoreWriteBuilder(path: String, info: LogicalWriteInfo)
   }
 }
 
-final case class ChunkStatsMessage(entries: Seq[(String, Long, Long)])
+final case class ChunkStatsMessage(entries: Seq[ChunkStore.Peek])
     extends WriterCommitMessage
 
 class ChunkStoreWriterFactory(dir: String, vm: VolumeMeta, level: Int, fc: FioConf)
@@ -183,7 +183,7 @@ class ChunkStoreWriterFactory(dir: String, vm: VolumeMeta, level: Int, fc: FioCo
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new DataWriter[InternalRow] {
       private val enc = new ChunkStore.ChunkFileEncoder(dir, vm, level)(fc)
-      private val stats = Seq.newBuilder[(String, Long, Long)]
+      private val stats = Seq.newBuilder[ChunkStore.Peek]
 
       override def write(row: InternalRow): Unit = {
         val c = Chunk(

@@ -2,7 +2,7 @@ package graft.volume
 
 import graft.io.{Fio, FioConf}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.api.java.UDF3
+import org.apache.spark.sql.api.java.UDF6
 import org.apache.spark.sql.functions.col
 import com.github.luben.zstd.Zstd
 import java.nio.{ByteBuffer, ByteOrder}
@@ -29,8 +29,10 @@ object ChunkStore {
 
   /** Consolidated per-chunk stats index: ONE driver read replaces N
     * 64-byte header peeks at planning time (at ~1M chunks, one file vs 1M
-    * sequential opens). Text lines `cz.cy.cx lmin lmax`; chunk files stay
-    * self-describing (the header remains the fallback + per-task truth).
+    * sequential opens). Text lines `cz.cy.cx lmin lmax z0 y0 x0 nz ny nx`
+    * (format 2; format-1 lines stop after `lmax`, so their chunks' boxes
+    * come from header peeks). Chunk files stay self-describing (the header
+    * remains the fallback + per-task truth).
     */
   val StatsIndexName = ".graft_stats"
 
@@ -70,14 +72,14 @@ object ChunkStore {
     * delete, no sidecar) — the incremental-ingest building block used by
     * the streaming path; a chunk re-appearing overwrites its own file
     * (idempotent per chunk coordinate). Each task returns its chunks'
-    * (coord, lmin, lmax) stats, which merge into the consolidated
+    * boxes and label ranges, which merge into the consolidated
     * [[StatsIndexName]] index — stats ride back as the job result, so the
     * driver never re-reads what executors just wrote.
     */
   /** Stateful per-task chunk encoder: compresses and writes one GCS2
     * chunk file per call (reusing one compression buffer — multi-MB
     * chunks would otherwise churn 2 humongous allocations each through
-    * the GC) and returns the chunk's (name, lmin, lmax) stats entry.
+    * the GC) and returns the chunk's stats-index entry.
     * Shared by [[appendChunks]] and the DSv2 write path.
     */
   private[graft] final class ChunkFileEncoder(pathStr: String, meta: VolumeMeta, level: Int)(
@@ -87,7 +89,7 @@ object ChunkStore {
     private val integral = !meta.isFloating
     private var dst: Array[Byte] = null
 
-    def encode(c: Chunk): (String, Long, Long) = {
+    def encode(c: Chunk): Peek = {
       val bound = Zstd.compressBound(c.data.length.toLong).toInt
       if (dst == null || dst.length < bound) dst = ByteKernels.allocBytes(bound)
       // reused native context (the static compress entry builds and frees
@@ -111,7 +113,7 @@ object ChunkStore {
         .putLong(lmin).putLong(lmax)
       val out = Fio.createStream(Fio.child(pathStr, s"${c.cz}.${c.cy}.${c.cx}"))
       try { out.write(buf.array()); out.write(dst, 0, n) } finally out.close()
-      (s"${c.cz}.${c.cy}.${c.cx}", lmin, lmax)
+      Peek(c.cz, c.cy, c.cx, c.z0, c.y0, c.x0, c.nz, c.ny, c.nx, lmin, lmax)
     }
   }
 
@@ -123,36 +125,51 @@ object ChunkStore {
     val stats = chunks.mapPartitions { (it: Iterator[Chunk]) =>
       val enc = new ChunkFileEncoder(pathStr, meta, level)
       it.map(enc.encode)
-    }.collect() // ~40 B per chunk: 1M chunks ≈ 40 MB on the driver, once per write
+    }.collect() // ~100 B per chunk: 1M chunks ≈ 100 MB on the driver, once per write
     mergeStatsIndex(pathStr, stats)
   }
 
-  /** Merge (name, lmin, lmax) entries into the stats index atomically
-    * (re-appended coords take the newest entry).
+  /** Merge entries into the stats index atomically (re-appended coords
+    * take the newest entry; format-1 lines of older writers are kept).
     */
-  private[graft] def mergeStatsIndex(pathStr: String, entries: Seq[(String, Long, Long)])(
+  private[graft] def mergeStatsIndex(pathStr: String, entries: Seq[Peek])(
       implicit fc: FioConf): Unit = {
-    val merged = readStatsIndex(pathStr).getOrElse(Map.empty) ++
-      entries.map { case (n, lo, hi) => n -> (lo, hi) }
+    val merged = readIndexLines(pathStr).getOrElse(Map.empty) ++ entries.map(e => e.name -> e.indexLine)
     val tmp = Fio.child(pathStr, StatsIndexName + ".tmp")
-    val body = merged.toSeq.sorted
-      .map { case (n, (lo, hi)) => s"$n $lo $hi" }
-      .mkString("GRAFT_STATS 1\n", "\n", "\n")
+    val body = merged.toSeq.sorted.map(_._2).mkString("GRAFT_STATS 2\n", "\n", "\n")
     Fio.writeString(tmp, body)
     Fio.renameOverwrite(tmp, Fio.child(pathStr, StatsIndexName))
   }
 
-  /** The consolidated stats index, if present: name -> (lmin, lmax). */
-  def readStatsIndex(pathStr: String)(implicit fc: FioConf): Option[Map[String, (Long, Long)]] = {
+  /** The stats index's lines by chunk name, if the index is present. */
+  private def readIndexLines(pathStr: String)(implicit fc: FioConf): Option[Map[String, String]] = {
     val body = Fio.readStringIfExists(Fio.child(pathStr, StatsIndexName))
     if (body.isEmpty) return None
     val lines = body.get.split("\n", -1).toSeq
-    if (lines.isEmpty || lines.head != "GRAFT_STATS 1") return None
-    Some(lines.drop(1).filter(_.nonEmpty).map { line =>
-      val Array(n, lo, hi) = line.split(" ")
-      n -> (lo.toLong, hi.toLong)
-    }.toMap)
+    if (lines.isEmpty || !Set("GRAFT_STATS 1", "GRAFT_STATS 2")(lines.head)) return None
+    Some(lines.drop(1).filter(_.nonEmpty).map(l => l.takeWhile(_ != ' ') -> l).toMap)
   }
+
+  /** One index line's label range, and its chunk's full entry when the
+    * line records the box (format 2).
+    */
+  private def parseLine(line: String): (Long, Long, Option[Peek]) = {
+    val f = line.split(" ")
+    val (lmin, lmax) = (f(1).toLong, f(2).toLong)
+    val peek = if (f.length < 9) None else {
+      val Array(cz, cy, cx) = f(0).split("\\.").map(_.toInt)
+      Some(Peek(cz, cy, cx, f(3).toLong, f(4).toLong, f(5).toLong,
+        f(6).toInt, f(7).toInt, f(8).toInt, lmin, lmax))
+    }
+    (lmin, lmax, peek)
+  }
+
+  /** The consolidated stats index, if present: name -> (lmin, lmax). */
+  def readStatsIndex(pathStr: String)(implicit fc: FioConf): Option[Map[String, (Long, Long)]] =
+    readIndexLines(pathStr).map(_.map { case (n, l) =>
+      val (lmin, lmax, _) = parseLine(l)
+      n -> (lmin, lmax)
+    })
 
   private[volume] def chunkFileNames(pathStr: String)(implicit fc: FioConf): Seq[String] =
     Fio.listNames(pathStr)
@@ -169,38 +186,48 @@ object ChunkStore {
   /** A chunk's descriptor and label range, as its header records them. */
   final case class Peek(
       cz: Int, cy: Int, cx: Int, z0: Long, y0: Long, x0: Long,
-      nz: Int, ny: Int, nx: Int, lmin: Long, lmax: Long)
+      nz: Int, ny: Int, nx: Int, lmin: Long, lmax: Long) {
+    def name: String = s"$cz.$cy.$cx"
+    def indexLine: String = s"$name $lmin $lmax $z0 $y0 $x0 $nz $ny $nx"
+  }
 
-  /** One descriptor row per chunk file from its 64-byte header peek —
-    * ragged edge chunks do not start on `c·chunkZ`, so only the header
-    * knows their box — plus the header's label range (`lmin`, `lmax`).
-    * The peeks run in the scan's tasks, one slice per core.
+  /** One descriptor row per chunk file plus the header's label range
+    * (`lmin`, `lmax`). Ragged edge chunks do not start on `c·chunkZ`, so
+    * only the header knows their box: the stats index records it at
+    * write time, and a chunk the index does not cover is peeked (64-byte
+    * header read) in the scan's tasks. The driver-side rows ride in an RDD
+    * with one slice per core, so no action re-reads a file to find its box.
     */
-  private def descriptors(spark: SparkSession, pathStr: String, names: Seq[String])(
-      implicit fc: FioConf): Dataset[Peek] = {
+  private def descriptors(spark: SparkSession, pathStr: String, names: Seq[String],
+      index: Map[String, String])(implicit fc: FioConf): Dataset[Peek] = {
     import spark.implicits._
-    val peeked = spark.sparkContext.parallelize(names, StoreScan.slices(spark, names.size))
+    val rows = names.map(n => (n, index.get(n).flatMap(parseLine(_)._3)))
+    val peeked = spark.sparkContext.parallelize(rows, StoreScan.slices(spark, rows.size))
       .mapPartitions { it =>
         val hdr = new Array[Byte](HeaderBytes)
-        it.map { name =>
-          val in = Fio.openStream(Fio.child(pathStr, name))
-          try in.readFully(0L, hdr) finally in.close()
-          val h = readHeader(hdr)
-          val Array(cz, cy, cx) = name.split("\\.").map(_.toInt)
-          Peek(cz, cy, cx, h.z0, h.y0, h.x0, h.nz, h.ny, h.nx, h.lmin, h.lmax)
+        it.map {
+          case (_, Some(p)) => p
+          case (name, None) =>
+            val in = Fio.openStream(Fio.child(pathStr, name))
+            try in.readFully(0L, hdr) finally in.close()
+            val h = readHeader(hdr)
+            val Array(cz, cy, cx) = name.split("\\.").map(_.toInt)
+            Peek(cz, cy, cx, h.z0, h.y0, h.x0, h.nz, h.ny, h.nx, h.lmin, h.lmax)
         }
       }
     spark.createDataset(peeked)
   }
 
-  private def decoder(pathStr: String)(implicit fc: FioConf): UDF3[Int, Int, Int, Array[Byte]] =
-    (cz, cy, cx) => decodeFile(pathStr, s"$cz.$cy.$cx")
+  /** The file's own header gives the payload length, so the box is unused. */
+  private def decoder(pathStr: String)(implicit fc: FioConf): UDF6[Int, Int, Int, Int, Int, Int, Array[Byte]] =
+    (cz, cy, cx, _, _, _) => decodeFile(pathStr, s"$cz.$cy.$cx")
 
   def read(spark: SparkSession, path: String): ChunkVolume = {
     implicit val fc: FioConf = FioConf.of(spark)
     val meta = ChunkVolume.readSidecar(path)
     val pathStr = Fio.qualify(path)
-    val desc = descriptors(spark, pathStr, chunkFileNames(pathStr))
+    val index = readIndexLines(pathStr).getOrElse(Map.empty)
+    val desc = descriptors(spark, pathStr, chunkFileNames(pathStr), index)
     ChunkVolume(StoreScan.decodeLate(desc)(decoder(pathStr)), meta)
   }
 
@@ -218,14 +245,11 @@ object ChunkStore {
     val bpp = meta.bytesPerVoxel
     val unsigned = meta.isUnsigned
     val pathStr = Fio.qualify(path)
-    val candidateNames = readStatsIndex(pathStr) match {
-      case Some(idx) =>
-        chunkFileNames(pathStr).filter { name =>
-          idx.get(name).forall { case (lo, hi) => lo <= label && label <= hi }
-        }
-      case None => chunkFileNames(pathStr)
+    val index = readIndexLines(pathStr).getOrElse(Map.empty)
+    val candidateNames = chunkFileNames(pathStr).filter { name =>
+      index.get(name).forall { l => val (lo, hi, _) = parseLine(l); lo <= label && label <= hi }
     }
-    val desc = descriptors(spark, pathStr, candidateNames)
+    val desc = descriptors(spark, pathStr, candidateNames, index)
       .filter(col("lmin") <= label && col("lmax") >= label)
     import spark.implicits._
     StoreScan.decodeLate(desc)(decoder(pathStr))

@@ -1,7 +1,7 @@
 package graft.volume
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.api.java.UDF3
+import org.apache.spark.sql.api.java.UDF6
 import org.apache.spark.sql.functions.{col, udf}
 import org.apache.spark.sql.types.BinaryType
 
@@ -35,35 +35,41 @@ private[graft] object StoreScan {
   def slices(spark: SparkSession, nChunks: Long): Int =
     math.max(1L, math.min(nChunks, spark.sparkContext.defaultParallelism.toLong)).toInt
 
-  /** Descriptors of a uniform chunk grid (zarr v2/v3) by arithmetic: edge
-    * chunks are trimmed to the volume, every chunk starts on the grid.
+  /** The box of grid cell (cz,cy,cx) of a uniform chunk grid (zarr
+    * v2/v3): every chunk starts on the grid, edge chunks are trimmed to
+    * the volume.
     */
+  def gridBox(vm: VolumeMeta, cz: Int, cy: Int, cx: Int): ChunkDesc = {
+    val z0 = cz.toLong * vm.chunkZ; val y0 = cy.toLong * vm.chunkY; val x0 = cx.toLong * vm.chunkX
+    ChunkDesc(cz, cy, cx, z0, y0, x0,
+      math.min(vm.chunkZ.toLong, vm.dimZ - z0).toInt,
+      math.min(vm.chunkY.toLong, vm.dimY - y0).toInt,
+      math.min(vm.chunkX.toLong, vm.dimX - x0).toInt)
+  }
+
+  /** Descriptors of a uniform chunk grid by arithmetic ([[gridBox]]). */
   def gridDescriptors(spark: SparkSession, vm: VolumeMeta): Dataset[ChunkDesc] = {
     import spark.implicits._
     val (ncy, ncx) = (vm.ncy.toLong, vm.ncx.toLong)
     val n = vm.ncz.toLong * ncy * ncx
     spark.range(0, n, 1, slices(spark, n)).as[Long].map { idx =>
-      val cz = (idx / (ncy * ncx)).toInt
-      val cy = ((idx / ncx) % ncy).toInt
-      val cx = (idx % ncx).toInt
-      val z0 = cz.toLong * vm.chunkZ; val y0 = cy.toLong * vm.chunkY; val x0 = cx.toLong * vm.chunkX
-      ChunkDesc(cz, cy, cx, z0, y0, x0,
-        math.min(vm.chunkZ.toLong, vm.dimZ - z0).toInt,
-        math.min(vm.chunkY.toLong, vm.dimY - y0).toInt,
-        math.min(vm.chunkX.toLong, vm.dimX - x0).toInt)
+      gridBox(vm, (idx / (ncy * ncx)).toInt, ((idx / ncx) % ncy).toInt, (idx % ncx).toInt)
     }
   }
 
   /** Name of the decode projection's UDF, as plans show it. */
   val DecodeUdf = "decode_chunk"
 
-  /** The chunks of `desc`, with `data` = `decode(cz, cy, cx)` as a
-    * deterministic projection above the descriptor columns.
+  /** The chunks of `desc`, with `data` = `decode(cz, cy, cx, nz, ny, nx)`
+    * as a deterministic projection above the descriptor columns: the
+    * decode gets the descriptor's box, it does not recompute it.
     */
-  def decodeLate(desc: Dataset[_])(decode: UDF3[Int, Int, Int, Array[Byte]]): Dataset[Chunk] = {
+  def decodeLate(desc: Dataset[_])(
+      decode: UDF6[Int, Int, Int, Int, Int, Int, Array[Byte]]): Dataset[Chunk] = {
     import desc.sparkSession.implicits._
     val data = udf(decode, BinaryType).withName(DecodeUdf)
-    desc.select(Seq("cz", "cy", "cx", "z0", "y0", "x0", "nz", "ny", "nx").map(col) :+
-      data(col("cz"), col("cy"), col("cx")).as("data"): _*).as[Chunk]
+    val cols = Seq("cz", "cy", "cx", "z0", "y0", "x0", "nz", "ny", "nx").map(col)
+    desc.select(cols :+ data(Seq("cz", "cy", "cx", "nz", "ny", "nx").map(col): _*).as("data"): _*)
+      .as[Chunk]
   }
 }

@@ -392,9 +392,9 @@ object Zarr3Store {
       spacingX = 1.0, spacingY = 1.0, spacingZ = 1.0)
     val sep = zm.dimSeparator
     // default chunk key encoding: "c" <sep> z <sep> y <sep> x
-    val chunks = StoreScan.decodeLate(StoreScan.gridDescriptors(spark, vm)) { (cz, cy, cx) =>
+    val chunks = StoreScan.decodeLate(StoreScan.gridDescriptors(spark, vm)) { (cz, cy, cx, nz, ny, nx) =>
       val bytes = Fio.readAllIfExists(Fio.child(dir, Seq("c", cz, cy, cx).mkString(sep)))
-      ZarrStore.decodeChunk(bytes, zm, vm, cz, cy, cx).data
+      ZarrStore.decodeData(bytes, zm, vm, cz, cy, cx, nz, ny, nx)
     }
     ChunkVolume(chunks, vm)
   }

@@ -817,12 +817,19 @@ object ZarrStore {
   private[graft] def decodeChunk(
       bytes: Option[Array[Byte]], zm: ZarrMeta, vm: VolumeMeta,
       cz: Int, cy: Int, cx: Int): Chunk = {
+    val d = StoreScan.gridBox(vm, cz, cy, cx)
+    Chunk(cz, cy, cx, d.z0, d.y0, d.x0, d.nz, d.ny, d.nx,
+      decodeData(bytes, zm, vm, cz, cy, cx, d.nz, d.ny, d.nx))
+  }
+
+  /** The payload of [[decodeChunk]] for grid cell (cz,cy,cx) whose box,
+    * trimmed to the volume, is nz·ny·nx.
+    */
+  private[graft] def decodeData(
+      bytes: Option[Array[Byte]], zm: ZarrMeta, vm: VolumeMeta,
+      cz: Int, cy: Int, cx: Int, nz: Int, ny: Int, nx: Int): Array[Byte] = {
     val bpp = zm.bpp
-    val z0 = cz.toLong * vm.chunkZ; val y0 = cy.toLong * vm.chunkY; val x0 = cx.toLong * vm.chunkX
-    val nz = math.min(vm.chunkZ.toLong, vm.dimZ - z0).toInt
-    val ny = math.min(vm.chunkY.toLong, vm.dimY - y0).toInt
-    val nx = math.min(vm.chunkX.toLong, vm.dimX - x0).toInt
-    val data = bytes match {
+    bytes match {
       case None =>
         val fill = new Array[Byte](nz * ny * nx * bpp)
         if (zm.fillValue != 0L) {
@@ -842,7 +849,6 @@ object ZarrStore {
         if (nz == vm.chunkZ && ny == vm.chunkY && nx == vm.chunkX) full
         else ChunkKernels.extractBox(full, vm.chunkY, vm.chunkX, bpp, 0, 0, 0, nz, ny, nx)
     }
-    Chunk(cz, cy, cx, z0, y0, x0, nz, ny, nx, data)
   }
 
   /** Read a zarr v2 array directory as a ChunkVolume. The full chunk grid
@@ -854,8 +860,8 @@ object ZarrStore {
     val (zm, vm) = readMeta(path)
     val pathStr = Fio.qualify(path)
     val sep = zm.dimSeparator
-    val chunks = StoreScan.decodeLate(StoreScan.gridDescriptors(spark, vm)) { (cz, cy, cx) =>
-      decodeChunk(Fio.readAllIfExists(Fio.child(pathStr, s"$cz$sep$cy$sep$cx")), zm, vm, cz, cy, cx).data
+    val chunks = StoreScan.decodeLate(StoreScan.gridDescriptors(spark, vm)) { (cz, cy, cx, nz, ny, nx) =>
+      decodeData(Fio.readAllIfExists(Fio.child(pathStr, s"$cz$sep$cy$sep$cx")), zm, vm, cz, cy, cx, nz, ny, nx)
     }
     ChunkVolume(chunks, vm)
   }

@@ -303,6 +303,53 @@ class ChunkVolumeSpec extends AnyFunSuite with SparkSpec {
     for (((z, y, x), l) <- crop) assert(l === orig((z / 2, y / 2, x / 2)), s"voxel ($z,$y,$x)")
   }
 
+  test("ChunkStore read takes chunk boxes from the stats index: a point lookup opens one file") {
+    val dir = Files.createTempDirectory("cstore").toString + "/indexed"
+    ChunkStore.write(vol.upscale(2), dir)
+    spark.sparkContext.hadoopConfiguration.set("fs.countfs.impl", classOf[OpenCountingFs].getName)
+    spark.sparkContext.hadoopConfiguration.setBoolean("fs.countfs.impl.disable.cache", true)
+    val url = "countfs://" + dir
+    def opens(f: => Any): Int = { val n0 = OpenCountingFs.opened.get; f; OpenCountingFs.opened.get - n0 }
+    val store = ChunkStore.read(spark, url)
+    val nChunks = store.chunks.select("cz").count().toInt
+    val orig = collectVox(vox)
+    assert(opens(assert(store.pointLookup(22, 17, 25) === Some(orig((11, 8, 12))))) === 1)
+    assert(opens(store.chunks.select("z0", "nz").collect()) === 0)
+    assert(opens(store.toVoxels.count()) === nChunks)
+    // an index without boxes (format 1) or none at all: each action peeks
+    // every header once, and the ragged boxes are the same
+    val boxes = store.chunks.select("cz", "cy", "cx", "z0", "y0", "x0", "nz", "ny", "nx")
+      .collect().map(_.toSeq).sortBy(_.mkString(",")).toSeq
+    val idx = java.nio.file.Paths.get(dir, ChunkStore.StatsIndexName)
+    val v1 = ChunkStore.readStatsIndex(dir).get.toSeq.sorted
+      .map { case (n, (lo, hi)) => s"$n $lo $hi" }.mkString("GRAFT_STATS 1\n", "\n", "\n")
+    for (index <- Seq(Some(v1), None)) {
+      index match { case Some(body) => Files.writeString(idx, body); case None => Files.delete(idx) }
+      val peeked = ChunkStore.read(spark, url)
+      assert(opens(assert(peeked.pointLookup(22, 17, 25) === Some(orig((11, 8, 12))))) === nChunks + 1)
+      assert(peeked.chunks.select("cz", "cy", "cx", "z0", "y0", "x0", "nz", "ny", "nx")
+        .collect().map(_.toSeq).sortBy(_.mkString(",")).toSeq === boxes)
+    }
+  }
+
+  test("pointLookup on a parquet chunk table prunes row groups with its literal bounds") {
+    val dir = Files.createTempDirectory("chunkstore").toString + "/rowgroups"
+    // one chunk per row group, so row-group min/max stats can prune
+    spark.conf.set("parquet.block.row.count.limit", "1")
+    try vol.write(dir) finally spark.conf.unset("parquet.block.row.count.limit")
+    val back = ChunkVolume.read(spark, dir)
+    val nChunks = back.chunks.count()
+    val orig = collectVox(vox)
+    def scannedRows(q: org.apache.spark.sql.Dataset[_]): Long = q.queryExecution.executedPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s.metrics("numOutputRows").value
+    }.sum
+    val q = back.pointQuery(0, 0, 0)
+    assert(q.collect().toSeq === Seq(orig((0L, 0L, 0L))))
+    // only `z0 <= z`-style bounds translate to parquet filters; at the
+    // origin they leave the one chunk that starts there
+    assert(nChunks === 27 && scannedRows(q) === 1)
+  }
+
   test("MhdReader: 200 point lookups and 200 partial scans close every handle they open") {
     val dir = Files.createTempDirectory("mhdfd")
     val (nz, ny, nx) = (6, 5, 7)
@@ -367,6 +414,7 @@ class OpenCountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def open(f: Path, bufferSize: Int): FSDataInputStream = {
     val in = super.open(f, bufferSize)
     OpenCountingFs.open.incrementAndGet()
+    OpenCountingFs.opened.incrementAndGet()
     val closed = new java.util.concurrent.atomic.AtomicBoolean(false)
     new FSDataInputStream(in.getWrappedStream) {
       override def close(): Unit = {
@@ -378,5 +426,6 @@ class OpenCountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
 }
 
 object OpenCountingFs {
-  val open = new java.util.concurrent.atomic.AtomicInteger
+  val open = new java.util.concurrent.atomic.AtomicInteger // streams open now
+  val opened = new java.util.concurrent.atomic.AtomicInteger // streams ever opened
 }
