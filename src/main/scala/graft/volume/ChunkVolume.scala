@@ -3,7 +3,6 @@ package graft.volume
 import graft.io.{Fio, FioConf}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.api.java.UDF6
-import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, LongType}
 
@@ -691,12 +690,12 @@ final case class ChunkVolume(chunks: Dataset[Chunk], meta: VolumeMeta) {
     }.toDF("z", "y", "x", "value")
   }
 
-  /** Point lookup WITHOUT a volume scan (P4): range predicates on the chunk
-    * coordinate columns prune to the single owning chunk (parquet row-group
-    * min/max stats after a sorted write; on a chunk-store read the filter
-    * runs below the decode projection, see [[StoreScan]]), then one element
-    * is decoded. Mirrors verify_labels.py:21 / view_with_labels.py:24
-    * touching exactly one zarr chunk.
+  /** Point lookup (P4): a predicate on the chunk coordinate columns keeps
+    * the single owning chunk, then one element is decoded. On a
+    * chunk-store read the predicate runs below the decode projection (see
+    * [[StoreScan]]), so only that chunk decompresses. Mirrors
+    * verify_labels.py:21 / view_with_labels.py:24 touching exactly one
+    * zarr chunk.
     */
   def pointLookup(z: Long, y: Long, x: Long): Option[Long] =
     // chunks tile the volume, so at most one row: one job over every
@@ -709,20 +708,13 @@ final case class ChunkVolume(chunks: Dataset[Chunk], meta: VolumeMeta) {
     val bpp = meta.bytesPerVoxel
     val unsigned = meta.isUnsigned
     import chunks.sparkSession.implicits._
-    val inBox =
-      if (chunks.queryExecution.analyzed.exists(_.isInstanceOf[LogicalRelation]))
-        // literal bounds: a file scan turns them into row-group pruning
-        col("z0") <= z && lit(z) < col("z0") + col("nz") &&
-          col("y0") <= y && lit(y) < col("y0") + col("ny") &&
-          col("x0") <= x && lit(x) < col("x0") + col("nx")
-      else {
-        // the point rides in a closure, so the generated code is the same
-        // for every point and compiles once; literal bounds would compile
-        // a new stage per lookup (~60 ms at 4 cores)
-        val contains: UDF6[Long, Int, Long, Int, Long, Int, Boolean] = (z0, nz, y0, ny, x0, nx) =>
-          z0 <= z && z < z0 + nz && y0 <= y && y < y0 + ny && x0 <= x && x < x0 + nx
-        udf(contains, BooleanType)(col("z0"), col("nz"), col("y0"), col("ny"), col("x0"), col("nx"))
-      }
+    // the point rides in a closure, so the generated code is the same for
+    // every point and compiles once. Literal bounds compile a new stage per
+    // lookup (~60 ms at 4 cores), more than the parquet row-group pruning
+    // they allow saves on a chunk table.
+    val contains: UDF6[Long, Int, Long, Int, Long, Int, Boolean] = (z0, nz, y0, ny, x0, nx) =>
+      z0 <= z && z < z0 + nz && y0 <= y && y < y0 + ny && x0 <= x && x < x0 + nx
+    val inBox = udf(contains, BooleanType)(col("z0"), col("nz"), col("y0"), col("ny"), col("x0"), col("nx"))
     // a UDF over `data`, not a typed map: the optimizer fuses it with a
     // store scan's decode, so the chunk bytes are never copied into a row
     val voxel: UDF6[Array[Byte], Long, Long, Long, Int, Int, Long] = (data, z0, y0, x0, ny, nx) =>
@@ -735,8 +727,8 @@ final case class ChunkVolume(chunks: Dataset[Chunk], meta: VolumeMeta) {
   }
 
   /** Chunk-store write (K1/K2): compressed parquet, one chunk per row,
-    * sorted WITHIN each task's partition by grid coordinate so point
-    * lookups prune on per-file/row-group min-max stats; plus the JSON
+    * sorted WITHIN each task's partition by grid coordinate so coordinate
+    * box filters prune on per-file/row-group min-max stats; plus the JSON
     * provenance sidecar (K4, `.atlas_upscale_meta.json` analog).
     *
     * Deliberately NO global repartition: producers (reader, upscale)

@@ -332,24 +332,6 @@ class ChunkVolumeSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("pointLookup on a parquet chunk table prunes row groups with its literal bounds") {
-    val dir = Files.createTempDirectory("chunkstore").toString + "/rowgroups"
-    // one chunk per row group, so row-group min/max stats can prune
-    spark.conf.set("parquet.block.row.count.limit", "1")
-    try vol.write(dir) finally spark.conf.unset("parquet.block.row.count.limit")
-    val back = ChunkVolume.read(spark, dir)
-    val nChunks = back.chunks.count()
-    val orig = collectVox(vox)
-    def scannedRows(q: org.apache.spark.sql.Dataset[_]): Long = q.queryExecution.executedPlan.collect {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec => s.metrics("numOutputRows").value
-    }.sum
-    val q = back.pointQuery(0, 0, 0)
-    assert(q.collect().toSeq === Seq(orig((0L, 0L, 0L))))
-    // only `z0 <= z`-style bounds translate to parquet filters; at the
-    // origin they leave the one chunk that starts there
-    assert(nChunks === 27 && scannedRows(q) === 1)
-  }
-
   test("MhdReader: 200 point lookups and 200 partial scans close every handle they open") {
     val dir = Files.createTempDirectory("mhdfd")
     val (nz, ny, nx) = (6, 5, 7)
